@@ -10,6 +10,14 @@ object Model {
   case class InSpan(kind: String, text: String, media_ref: String, offset: Int)
   case class DocRow(doc_id: String, spans: Seq[InSpan])
   case class MediaRow(media_ref: String, bytes: Array[Byte], size_bucket: Int)
+  object MediaRow {
+    /** A media row with its log2 size bucket, the smallest b ≥ 1 with
+      * bytes ≤ 2^b — the pushable column the heavy/small kernel split
+      * filters on. */
+    def apply(media_ref: String, bytes: Array[Byte]): MediaRow =
+      MediaRow(media_ref, bytes, sizeBucket(bytes.length))
+    def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
+  }
 
   /** Output span: kind ∈ {text, pdf_text, error}; order 0-based contiguous. */
   case class OutSpan(doc_id: String, order: Int, kind: String, text: String, media_ref: String)
@@ -128,6 +136,21 @@ object ExtractJob {
     pdfSpans.unionByName(textSpans)
   }
 
+  /** The media refs span assembly joins: distinct `media_ref` of every
+    * non-text span. Text spans never reach the kernel, even when they carry
+    * a `media_ref`. */
+  def neededRefs(docs: DataFrame): DataFrame =
+    docs.select(explode(col("spans")).as("span"))
+      .where(col("span.kind") =!= "text")
+      .select(col("span.media_ref").as("media_ref")).distinct()
+
+  /** docs + media → ordered spans (doc_id, order, kind, text, media_ref):
+    * [[neededRefs]] → [[extractMedia]] → [[assembleSpans]], the one
+    * extraction composition (`run` adds resume, lineage and commit). */
+  def extract(docs: DataFrame, media: DataFrame, numPartitions: Int)
+             (implicit spark: SparkSession): DataFrame =
+    assembleSpans(docs, extractMedia(media, neededRefs(docs), numPartitions).toDF())
+
   /** Committed snapshot history, oldest first: the manifest the atomic
     * swap maintains — the resume, expiry, and time-travel seam. */
   def committedSnapshots(outDir: String): Seq[String] = {
@@ -181,11 +204,8 @@ object ExtractJob {
       docs0.join(done, Seq("doc_id"), "left_anti")
     } else docs0
 
-    val exploded = docs.select(col("doc_id"), explode(col("spans")).as("span"))
-    val neededRefs = exploded.filter(col("span.kind") =!= "text")
-      .select(col("span.media_ref").as("media_ref")).distinct()
-
-    val extracted = extractMedia(media, neededRefs, parts)
+    // extract's composition, with the extracted media kept between its steps
+    val extracted = extractMedia(media, neededRefs(docs), parts)
     // reused by the spans join + lineage/metrics aggregation; DISK_ONLY —
     // the extracted text of a whole input split must not pin executor heap
     extracted.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)

@@ -93,12 +93,19 @@ object SparkEntry {
     * function exits. Instead each invocation registers a cleanup closure
     * that the NEXT invocation of the same query runs first, so repeated
     * bench/oracle invocations hold at most one generation of tables and
-    * disk per query instead of accumulating without bound. */
+    * disk per query instead of accumulating without bound.
+    *
+    * Contract: each query runs single-threaded per key — the cleanup deletes
+    * the previous invocation's inputs, so two concurrent invocations of
+    * the same query would delete each other's live tables. A failed cleanup
+    * is reported on stderr with its key and never fails the new invocation. */
   private val pendingCleanup =
     new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
   private def recycle(key: String)(cleanup: () => Unit): Unit = {
     val prev = pendingCleanup.put(key, cleanup)
-    if (prev != null) try prev() catch { case _: Throwable => () }
+    if (prev != null) try prev() catch {
+      case scala.util.control.NonFatal(e) => System.err.println(s"graft: cleanup of '$key' failed: $e")
+    }
   }
   private def deleteDir(path: String): Unit = {
     def rec(f: java.io.File): Unit = {
@@ -148,8 +155,6 @@ object SparkEntry {
   private def outKind(f: PdfBuilder.Fixture): String =
     if (f.name == "f16_garbage") "error" else inKind(f) + "_text"
 
-  private def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
-
   /** Run the extraction pipeline over a one-doc-per-fixture corpus. */
   private def extractionDF(spark: SparkSession, fixtures: Seq[PdfBuilder.Fixture]): DataFrame = {
     implicit val s: SparkSession = spark
@@ -157,10 +162,8 @@ object SparkEntry {
     val docs = s.createDataset(fixtures.map(f =>
       Model.DocRow(f.name, Seq(Model.InSpan(inKind(f), "", f.name, 0))))).toDF()
     val media = s.createDataset(fixtures.map(f =>
-      Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref")).distinct()
-    val extracted = ExtractJob.extractMedia(media, refs, s.sessionState.conf.numShufflePartitions)
-    ExtractJob.assembleSpans(docs, extracted.toDF())
+      Model.MediaRow(f.name, f.bytes))).toDF()
+    ExtractJob.extract(docs, media, s.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
   }
 
@@ -745,10 +748,7 @@ object SparkEntry {
     val built = Corpus.build(nDocs = 16, heavyEvery = 8)
     val docs = s.createDataset(built.docs).toDF()
     val media = s.createDataset(built.media).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref"))
-      .where(col("media_ref") =!= "").distinct()
-    ExtractJob.assembleSpans(docs,
-      ExtractJob.extractMedia(media, refs, 8).toDF())
+    ExtractJob.extract(docs, media, 8)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
@@ -1791,7 +1791,7 @@ object SparkEntry {
           Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
         docs.coalesce(1).write.parquet(s"$tmp/docs")
         val media = sp.createDataset(fs.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+          Model.MediaRow(f.name, f.bytes))).toDF()
         graft.streaming.StreamingExtract.start(sp, s"$tmp/docs", media, s"$tmp/out", docs.schema)
           .awaitTermination()
         sp.read.parquet(s"$tmp/out/spans_out")
@@ -1827,7 +1827,7 @@ object SparkEntry {
         def docsDf(fs: Seq[PdfBuilder.Fixture]) = sp.createDataset(fs.map(f =>
           Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
         val media = sp.createDataset(fs2.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+          Model.MediaRow(f.name, f.bytes))).toDF()
         val tmp = java.nio.file.Files.createTempDirectory("graft-travel").toString
         recycle("graft-travel")(() => deleteDir(tmp))
         // fixture-scale runs: 4 partitions (the heavy-branch salt spread
@@ -1853,7 +1853,7 @@ object SparkEntry {
         def docsDf(fs: Seq[PdfBuilder.Fixture]) = sp.createDataset(fs.map(f =>
           Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
         val media = sp.createDataset(fs2.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+          Model.MediaRow(f.name, f.bytes))).toDF()
         val tmp = java.nio.file.Files.createTempDirectory("graft-resume").toString
         recycle("graft-resume")(() => deleteDir(tmp))
         // fixture-scale runs: 4 partitions (see x_time_travel note)
@@ -1882,10 +1882,8 @@ object SparkEntry {
           Model.InSpan("pdf", "", g.name, 3),
           Model.InSpan("text", "outro", "", 4))))).toDF()
         val media = sp.createDataset(Seq(f01, h01, g).map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
-        val refs = docs.select(explode(col("spans.media_ref")).as("media_ref"))
-          .where(col("media_ref") =!= "").distinct()
-        ExtractJob.assembleSpans(docs, ExtractJob.extractMedia(media, refs, 4).toDF())
+          Model.MediaRow(f.name, f.bytes))).toDF()
+        ExtractJob.extract(docs, media, 4)
           .select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
       }),
       // in-content image references from the HTML kernel (media spans a

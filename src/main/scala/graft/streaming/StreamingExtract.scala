@@ -25,11 +25,7 @@ object StreamingExtract {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         implicit val s: SparkSession = batch.sparkSession
-        val refs = batch.select(explode(col("spans.media_ref")).as("media_ref"))
-          .where(col("media_ref") =!= "").distinct()
-        val extracted = graft.ExtractJob.extractMedia(media, refs,
-          s.sessionState.conf.numShufflePartitions)
-        graft.ExtractJob.assembleSpans(batch, extracted.toDF())
+        graft.ExtractJob.extract(batch, media, s.sessionState.conf.numShufflePartitions)
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(s"$outDir/spans_out")
         ()

@@ -33,28 +33,30 @@ object Corpus {
     (PdfBuilder.build(objs.toSeq, 1), expected.toString)
   }
 
+  /** Bench-corpus media `id` (the `writeBenchCorpus` and `KernelBench`
+    * mix): realistic per-document weight (real PDFs are 10s-100s of KB,
+    * not 3 KB) — a seeded 10-30 page text PDF, and a 96-page monster on
+    * the skew tail for the first media of every `heavyEvery`-th doc. */
+  def benchMedia(id: Long, heavyEvery: Int = 100, pdfsPerDoc: Int = 2): Array[Byte] = {
+    val rnd = new java.util.Random(42L + id)
+    val heavy = (id / pdfsPerDoc) % heavyEvery == 0 && id % pdfsPerDoc == 0
+    val pages = if (heavy) 96 else 10 + rnd.nextInt(21)
+    textPdf(f"m$id", pages, linesPerPage = 30)._1
+  }
+
   final case class Built(docs: Seq[DocRow], media: Seq[MediaRow], expected: Seq[OutSpan])
 
   /** Distributed bench corpus: PDFs are synthesized ON THE EXECUTORS (the
     * builder is deterministic per media id), so corpus generation scales
     * with cores like the extraction itself. ~2 media per doc; 1% of docs
-    * carry a 64-page monster (skew tail, north rule). Writes parquet and
+    * carry a 96-page monster (skew tail, north rule). Writes parquet and
     * returns (nDocs, nMedia). */
   def writeBenchCorpus(spark: SparkSession, nDocs: Int, outDir: String,
                        pdfsPerDoc: Int = 2, heavyEvery: Int = 100): (Long, Long) = {
     import spark.implicits._
     val nMedia = nDocs.toLong * pdfsPerDoc
     val media = spark.range(nMedia).mapPartitions { ids =>
-      ids.map { id =>
-        val doc = id / pdfsPerDoc
-        val rnd = new java.util.Random(42L + id)
-        val heavy = doc % heavyEvery == 0 && id % pdfsPerDoc == 0
-        // realistic per-document weight (real PDFs are 10s-100s of KB, not
-        // 3 KB): 10-30 pages typical, 96-page monsters on the skew tail
-        val pages = if (heavy) 96 else 10 + rnd.nextInt(21)
-        val (bytes, _) = textPdf(f"m$id", pages, linesPerPage = 30)
-        MediaRow(f"m$id%08d", bytes, 32 - Integer.numberOfLeadingZeros(math.max(1, bytes.length - 1)))
-      }
+      ids.map(id => MediaRow(f"m$id%08d", benchMedia(id, heavyEvery, pdfsPerDoc)))
     }
     media.toDF().write.mode("overwrite").parquet(s"$outDir/media")
     val docs = spark.range(nDocs.toLong).map { i =>
@@ -68,8 +70,6 @@ object Corpus {
     docs.toDF().write.mode("overwrite").parquet(s"$outDir/docs")
     (nDocs.toLong, nMedia)
   }
-
-  private def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
 
   /** `nDocs` interleaved documents; ~1/heavyEvery media are 50-page monsters
     * (skew exercise); fixture PDFs (incl. the garbage one) are mixed in. */
@@ -109,7 +109,7 @@ object Corpus {
               (f.bytes, f.expected, true)
             }
           spans += InSpan("pdf", "", ref, j)
-          media += MediaRow(ref, bytes, sizeBucket(bytes.length))
+          media += MediaRow(ref, bytes)
           outs += ((if (ok) "pdf_text" else "error", if (ok) exp else "", ref))
         }
       }

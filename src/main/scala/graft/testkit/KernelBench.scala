@@ -3,20 +3,13 @@ package graft.testkit
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Spark-free kernel benchmark: generates the same deterministic PDF mix as
-  * the bench corpus (Corpus.writeBenchCorpus per-media formula) and runs
-  * `pdf2txt` on a fixed thread pool — isolates kernel throughput + thread
-  * scaling from all Spark machinery. Args: nMedia [threadList] */
+/** Spark-free kernel throughput: the bench corpus's deterministic PDF mix
+  * (`Corpus.benchMedia`) and `pdf2txt` on a fixed thread pool — isolates
+  * kernel throughput + thread scaling from all Spark machinery. */
 object KernelBench {
 
   def genMedia(n: Int, heavyEvery: Int = 100, pdfsPerDoc: Int = 2): Array[Array[Byte]] =
-    (0 until n).map { id =>
-      val doc = id / pdfsPerDoc
-      val rnd = new java.util.Random(42L + id)
-      val heavy = doc % heavyEvery == 0 && id % pdfsPerDoc == 0
-      val pages = if (heavy) 96 else 10 + rnd.nextInt(21)
-      Corpus.textPdf(f"m$id", pages, linesPerPage = 30)._1
-    }.toArray
+    Array.tabulate(n)(id => Corpus.benchMedia(id, heavyEvery, pdfsPerDoc))
 
   def run(media: Array[Array[Byte]], threads: Int): Double = {
     val pool = Executors.newFixedThreadPool(threads)
@@ -39,18 +32,5 @@ object KernelBench {
     pool.awaitTermination(1, TimeUnit.MINUTES)
     val sec = (System.nanoTime() - t0) / 1e9
     media.length / sec
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toInt else 2000
-    val threadList = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq else Seq(1, 4, 16, 32)
-    println(s"generating $n media...")
-    val media = genMedia(n)
-    println(f"total bytes: ${media.map(_.length.toLong).sum / 1e6}%.1f MB")
-    run(media.take(math.min(n, 500)), 4) // warmup JIT
-    for (t <- threadList) {
-      val best = (1 to 3).map(_ => run(media, t)).max
-      println(f"threads=$t%2d  media/s=$best%.1f")
-    }
   }
 }

@@ -1,27 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.expressions.BloomContains
 
 /** Plan-embedded bloom filter: the native membership expression and the
   * bloom-prefiltered decontamination path. */
-class BloomContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BloomContainsSpec extends AnyFunSuite with SparkSpec {
 
   test("no false negatives; false-positive rate sane at 12 bits/item") {
     val r = new scala.util.Random(11)

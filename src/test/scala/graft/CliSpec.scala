@@ -49,12 +49,11 @@ class CliSpec extends AnyFunSuite {
       import spark.implicits._
       val base = java.nio.file.Files.createTempDirectory("cli-spark").toString
       val fs = Seq(PdfBuilder.f01MinimalFlate, PdfBuilder.f03Filters)
-      def bucket(n: Int) = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
       spark.createDataset(fs.map(f =>
         Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
         .write.parquet(s"$base/docs")
       spark.createDataset(fs.map(f =>
-        Model.MediaRow(f.name, f.bytes, bucket(f.bytes.length)))).toDF()
+        Model.MediaRow(f.name, f.bytes))).toDF()
         .write.parquet(s"$base/media")
       val out = withCapturedOut(
         Cli.main(Array("extract", s"$base/docs", s"$base/media", s"$base/out", "r1")))

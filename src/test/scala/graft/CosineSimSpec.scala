@@ -1,27 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Native codegen cosine expression: bitwise parity with the composed
   * builtin fold, codegen participation, and extensions registration. */
-class CosineSimSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CosineSimSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def extraConf: Map[String, String] =
+    Map("spark.sql.extensions" -> "graft.expressions.GraftExtensions")
 
   test("bitwise parity with the composed aggregate/zip_with fold") {
     val s = spark

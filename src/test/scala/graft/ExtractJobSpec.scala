@@ -2,28 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.testkit.Corpus
 
 /** End-to-end Spark pipeline tests: span-sequence equality vs the
   * by-construction oracle, error tolerance, and snapshot resume. */
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("extract-job-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtractJobSpec extends AnyFunSuite with SparkSpec {
 
   private def tmpDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("extract-spec").toFile
@@ -148,6 +131,24 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!small.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning(size_bucket"))
     assert(heavy.queryExecution.executedPlan.toString.contains("Exchange"))
     assert(small.collect().map(key).sorted.toSeq == heavy.collect().map(key).sorted.toSeq)
+  }
+
+  test("a text span's media_ref is neither extracted nor joined") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val (f1, f3) = (testkit.PdfBuilder.f01MinimalFlate, testkit.PdfBuilder.f03Filters)
+    val docs = s.createDataset(Seq(Model.DocRow("d1", Seq(
+      Model.InSpan("text", "caption", f1.name, 0), Model.InSpan("pdf", "", f3.name, 1))))).toDF()
+    val media = s.createDataset(Seq(Model.MediaRow(f1.name, f1.bytes), Model.MediaRow(f3.name, f3.bytes))).toDF()
+    val extracted = ExtractJob.extractMedia(media, ExtractJob.neededRefs(docs), 4).collect()
+    assert(extracted.map(_.media_ref).toSeq == Seq(f3.name))
+    val want = Seq(("d1", 0, "text", "caption", ""), ("d1", 1, "pdf_text", f3.expected, f3.name))
+    def spans(df: org.apache.spark.sql.DataFrame) =
+      df.as[Model.OutSpan].collect().map(o => (o.doc_id, o.order, o.kind, o.text, o.media_ref)).sortBy(_._2).toSeq
+    assert(spans(ExtractJob.extract(docs, media, 4)) == want)
+    val out = tmpDir()
+    assert(spans(ExtractJob.run(docs, media, out, runId = "t4")) == want)
+    assert(s.read.parquet(s"$out/metrics").head().getAs[Long]("media_total") == 1L)
   }
 
   test("poison documents become error spans, job survives") {

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Native codegen mojibake-repair expression + the fixMojibake op. */
-class FixMojibakeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FixMojibakeSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def extraConf: Map[String, String] =
+    Map("spark.sql.extensions" -> "graft.expressions.GraftExtensions")
 
   test("repairs single, 3-byte and double-encoded mojibake; healthy text is a fixpoint") {
     val s = spark

@@ -1,25 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.GraphOps
 
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graphops-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraphOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("degrees counts both sides incl. one-sided nodes") {
     val sp = spark; import sp.implicits._

@@ -2,27 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.html.Html
 import graft.testkit.{HtmlBuilder, PdfBuilder}
 
 /** HTML main-content kernel: fixture expectations, sniffing dispatch,
   * malformed-markup termination, and the mixed pdf+html e2e. */
-class HtmlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("html-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HtmlSpec extends AnyFunSuite with SparkSpec {
 
   HtmlBuilder.all.foreach { f =>
     test(s"${f.name}: main content matches the by-construction expectation") {

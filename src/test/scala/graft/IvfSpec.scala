@@ -1,19 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IvfSpec extends AnyFunSuite with SparkSpec {
 
   test("IVF kNN: scores agree with brute force on shared pairs; bpe count matches regex") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

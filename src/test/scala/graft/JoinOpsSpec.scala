@@ -1,28 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.JoinOps
 
 /** asofJoin and rangeJoin vs brute-force formulations on small data. */
-class JoinOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("joinops-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class JoinOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("asofJoin: latest right at-or-before each left, inclusive ties, null when none") {
     val sp = spark; import sp.implicits._

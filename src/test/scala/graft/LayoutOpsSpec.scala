@@ -1,32 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.LayoutOps
 
 /** Z-order layout: key correctness vs an independent bit-interleave, the
   * quantified pruning claim (a slab predicate on EITHER dimension touches
   * a strict subset of z-bins, while a row-major layout prunes only its
   * own sort column), and bucketed-table join/agg result invariance. */
-class LayoutOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("layoutops-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def extraConf: Map[String, String] =
+    Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
 
   /** Independent reference interleave (straight loop, no Spark). */
   private def refZ(a: Long, b: Long, bits: Int): Long = {
@@ -47,6 +33,13 @@ class LayoutOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.foreach { case (a, b, z) => assert(z == refZ(a, b, 8), s"a=$a b=$b") }
     // the curve is a bijection on the grid
     assert(got.map(_._3).distinct.length == rows.length)
+    // negative inputs contribute exactly their two's-complement low bits
+    val negs = Seq((-1L, 5L), (-128L, -3L), (-256L, 255L), (Long.MinValue, Long.MaxValue),
+      (Int.MinValue.toLong, -77L))
+    negs.toDF("a", "b")
+      .select(col("a"), col("b"), LayoutOps.zorderKey(col("a"), col("b"), 8).as("z"))
+      .as[(Long, Long, Long)].collect()
+      .foreach { case (a, b, z) => assert(z == refZ(a & 0xff, b & 0xff, 8), s"a=$a b=$b z=$z") }
   }
 
   test("z-order bins prune slab predicates on BOTH dimensions; row-major only on one") {

@@ -1,24 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.testkit.PdfBuilder
 
 /** SQL UDF surface: pdf2txt / pdf2txt_safe / pdf2pages from spark.sql. */
-class PdfFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PdfFunctionsSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
+  override protected def cores: Int = 2
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     functions.PdfFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("pdf2txt and pdf2pages work from SQL; _safe nulls garbage") {
     val s = spark

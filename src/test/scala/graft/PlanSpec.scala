@@ -3,28 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Physical-plan assertions: the plans we ship are the plans we want —
   * filters pushed to the scan, pruned read schemas, broadcast where a side
   * is small, whole-stage codegen on the hot paths. */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -236,8 +221,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val built = graft.testkit.Corpus.build(nDocs = 4)
     val docs = s.createDataset(built.docs).toDF()
     val media = s.createDataset(built.media).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref")).distinct()
-    val spans = ExtractJob.assembleSpans(docs, ExtractJob.extractMedia(media, refs, 4).toDF())
+    val spans = ExtractJob.extract(docs, media, 4)
     val p = spans.queryExecution.executedPlan.toString
     assert(p.contains("MapPartitions"), p) // kernel runs as a single narrow stage
   }

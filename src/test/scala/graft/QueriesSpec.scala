@@ -1,32 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Smoke-runs every SparkEntry query on sf0.001 (rows ≥ 0, no exceptions,
   * extraction queries nonempty) and sanity-checks key training ops. */
-class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QueriesSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("queries-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("entry: flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("every query has exactly one oracle: 141 names on both sides") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 141 && SparkEntry.oracleSql.size == 141)
   }
 
   test("every query runs; extraction and oracle-backed queries return rows") {
@@ -625,6 +613,32 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withNull.where(col("id") === 1L)
       .select(call_function(graft.expressions.IntDot.name, col("a"), col("b")))
       .collect().head.isNullAt(0))
+    // unequal lengths and NULL elements are NULL, as in the fold (zip_with
+    // pads with NULLs; a NULL product nulls the sum) — an RDD source keeps
+    // the projection out of the optimizer's local folding, so both the
+    // whole-stage codegen and the interpreted path are exercised
+    val edge = sp.sparkContext.parallelize(Seq[(Long, Seq[Integer], Seq[Integer])](
+      (60L, Seq(1, 2, 3), Seq(4, 5)),
+      (61L, Seq(1, 2), Seq(4, 5, 6)),
+      (62L, Seq(1, null, 3), Seq(4, 5, 6)),
+      (63L, Seq(1, 2, 3), Seq(4, 5, null)),
+      (64L, Seq(), Seq()),
+      (65L, Seq(), Seq(7)),
+      (66L, Seq(2, -3), Seq(5, 7)))).toDF("id", "a", "b")
+      .select(col("id"), composed.as("composed"), native.as("native"))
+    val modes = Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))
+    for ((wholeStage, factory) <- modes) {
+      sp.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      sp.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val got = edge.as[(Long, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
+        got.foreach { case (id, c, n) => assert(c == n, s"id=$id composed=$c native=$n ($factory)") }
+        assert(got.map(_._3) == Seq(None, None, None, None, Some(0L), None, Some(-11L)), s"$got ($factory)")
+      } finally {
+        sp.conf.unset("spark.sql.codegen.wholeStage")
+        sp.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("knnInt8: quantized cosine tracks float cosine (recall vs brute), zero vector ranks last") {

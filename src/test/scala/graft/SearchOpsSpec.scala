@@ -1,27 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.SearchOps
 
 /** BM25 retrieval vs an independent single-threaded JVM recompute of the
   * exact fixed-point scoring contract (same arithmetic, plain loops). */
-class SearchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("searchops-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SearchOpsSpec extends AnyFunSuite with SparkSpec {
 
   private val corpus = Seq(
     (1L, "spark shuffle join hash join"),

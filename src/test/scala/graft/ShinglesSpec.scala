@@ -1,28 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The native graft_shingles kernel must be byte-identical to the
   * composed-builtin formulation it replaced (split(lower)/transform/
   * slice/concat_ws) — the DuckDB oracles replicate THAT formulation, so
   * any divergence here is an oracle break, not a perf detail. */
-class ShinglesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ShinglesSpec extends AnyFunSuite with SparkSpec {
 
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 2
 
   /** The pre-round-6 composed-builtin formulation, verbatim. */
   private def shinglesReference(text: org.apache.spark.sql.Column, k: Int) = {

@@ -1,27 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.SketchOps
 
 /** HLL and CMS sketches vs independent JVM recomputation + analytic bounds. */
-class SketchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("sketchops-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SketchOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

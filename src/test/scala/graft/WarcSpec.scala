@@ -2,26 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.Warc
 import graft.testkit.WarcBuilder
 import graft.operators.WarcOps
 
-class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("warc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WarcSpec extends AnyFunSuite with SparkSpec {
 
   test("records: full archive structure — types, URIs, statuses, bodies") {
     val rs = Warc.records(WarcBuilder.plain).toVector
