@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed rows of the extraction pipeline (FIXTURES.md §1 / BASELINE input_hint). */
 object Model {
@@ -176,8 +177,18 @@ object ExtractJob {
     val runs = committedSnapshots(outDir)
     val idx = runs.indexOf(asOfRun)
     require(idx >= 0, s"run '$asOfRun' is not committed in $outDir (have: ${runs.mkString(", ")})")
-    spark.read.parquet(runs.take(idx + 1).map(r => s"$outDir/spans_out/run=$r"): _*)
+    readSpans(runs.take(idx + 1).map(spansDir(outDir, _)))
   }
+
+  private def spansDir(outDir: String, runId: String): String = s"$outDir/spans_out/run=$runId"
+
+  /** The committed span table as parquet reads it back: [[OutSpan]]'s
+    * columns, all nullable. Reading through it skips schema inference. */
+  private val spanSchema =
+    StructType(Encoders.product[OutSpan].schema.map(_.copy(nullable = true)))
+
+  private def readSpans(dirs: Seq[String])(implicit spark: SparkSession): DataFrame =
+    spark.read.schema(spanSchema).parquet(dirs: _*)
 
   /** Full job with resume + lineage + metrics; emulates Iceberg snapshot
     * commits with per-run staged directories plus an atomically-replaced
@@ -193,57 +204,59 @@ object ExtractJob {
   def run(docs0: DataFrame, media: DataFrame, outDir: String, runId: String,
           numPartitions: Int = 0)(implicit spark: SparkSession): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
     val committedFile = Paths.get(s"$outDir/_committed")
     val committedRuns: Seq[String] = committedSnapshots(outDir)
-    def spansDir(r: String) = s"$outDir/spans_out/run=$r"
 
     // resume: drop doc_ids present in COMMITTED runs only
     val docs = if (committedRuns.nonEmpty) {
-      val done = spark.read.parquet(committedRuns.map(spansDir): _*).select("doc_id").distinct()
+      val done = readSpans(committedRuns.map(spansDir(outDir, _))).select("doc_id").distinct()
       docs0.join(done, Seq("doc_id"), "left_anti")
     } else docs0
 
     // extract's composition, with the extracted media kept between its steps
     val extracted = extractMedia(media, neededRefs(docs), parts)
-    // reused by the spans join + lineage/metrics aggregation; DISK_ONLY —
-    // the extracted text of a whole input split must not pin executor heap
+    // reused by the lineage aggregate and the spans join; DISK_ONLY — the
+    // extracted text of a whole input split must not pin executor heap
     extracted.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    try {
+      // per-partition lineage (north rule: lineage + metrics alongside
+      // results), written as a distributed aggregate. This pass fills the
+      // cache, and the run metrics are observed on the same pass: sums of
+      // the per-partition sums, the same exact integers a second pass over
+      // the extraction would give. The empty-run coalesce keeps
+      // media_total = 0 with NULL sums.
+      val totals = Observation(s"metrics-$runId")
+      extracted.groupBy(col("partition_id"))
+        .agg(count(lit(1)).as("media_in"),
+          sum(when(col("ok"), 1L).otherwise(0L)).as("media_ok"),
+          sum(when(col("ok"), 0L).otherwise(1L)).as("media_failed"),
+          sum(col("bytes_in")).as("bytes_in"),
+          (sum(col("wall_us")) / 1000).cast("long").as("wall_ms"))
+        .withColumn("run_id", lit(runId))
+        .withColumn("input_snapshot", lit(outDir))
+        .observe(totals, coalesce(sum(col("media_in")), lit(0L)).as("media_total"),
+          sum(col("media_ok")).as("media_ok"),
+          sum(col("bytes_in")).as("bytes_total"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run=$runId")
+      val t = totals.get
+      def sumOf(k: String) = Option(t(k)).map(_.asInstanceOf[Long])
+      Seq((t("media_total").asInstanceOf[Long], sumOf("media_ok"), sumOf("bytes_total"), runId))
+        .toDF("media_total", "media_ok", "bytes_total", "run_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/run=$runId")
 
-    val spans = assembleSpans(docs, extracted.toDF())
-      .sortWithinPartitions("doc_id", "order")
-    spans.write.mode(SaveMode.Overwrite).parquet(spansDir(runId))
+      assembleSpans(docs, extracted.toDF())
+        .sortWithinPartitions("doc_id", "order")
+        .write.mode(SaveMode.Overwrite).parquet(spansDir(outDir, runId))
+    } finally extracted.unpersist() // after the last job of this run that reads it
 
-    // per-partition lineage (north rule: lineage + metrics alongside results)
-    val lineage = extracted.groupBy(col("partition_id"))
-      .agg(count(lit(1)).as("media_in"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("media_ok"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("media_failed"),
-        sum(col("bytes_in")).as("bytes_in"),
-        (sum(col("wall_us")) / 1000).cast("long").as("wall_ms"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("input_snapshot", lit(outDir))
-    lineage.write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run=$runId")
-
-    // run metrics fold up from the just-written per-partition lineage
-    // (guide §1.2: don't pay a second pass over the persisted extraction —
-    // sums of per-partition sums are the same exact integers; the empty-run
-    // coalesce keeps media_total = 0 with null sums, matching the direct
-    // aggregate's shape on zero media rows)
-    val metrics = spark.read.parquet(s"$outDir/lineage/run=$runId")
-      .agg(coalesce(sum(col("media_in")), lit(0L)).as("media_total"),
-        sum(col("media_ok")).as("media_ok"),
-        sum(col("bytes_in")).as("bytes_total"))
-      .withColumn("run_id", lit(runId))
-    metrics.write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/run=$runId")
-
-    extracted.unpersist()
     // snapshot commit: the run becomes visible only via the atomic swap
     val allRuns = (committedRuns :+ runId).distinct
     val tmp = Paths.get(s"$outDir/_committed.tmp")
     Files.write(tmp, allRuns.mkString("\n").getBytes("UTF-8"))
     Files.move(tmp, committedFile, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    spark.read.parquet(allRuns.map(spansDir): _*)
+    readSpans(allRuns.map(spansDir(outDir, _)))
   }
 
   /** Snapshot-expiry housekeeping (the Iceberg `expire_snapshots` /

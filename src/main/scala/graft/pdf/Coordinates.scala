@@ -7,7 +7,6 @@ import Lex._
 final class Coords(var x0: Float, var y0: Float, var x1: Float, var y1: Float) {
   def this() = this(0f, 0f, 0f, 0f)
   def copyOf: Coords = new Coords(x0, y0, x1, y1)
-  def sameAs(o: Coords): Boolean = x0 == o.x0 && y0 == o.y0 && x1 == o.x1 && y1 == o.y1
 }
 
 /** Positioned text atom (coordinates.h:34-58). The UTF-8 length is

@@ -256,35 +256,6 @@ object Layout {
     textBoxes
   }
 
-  /** pages_extractor.cc:392-400 — union-area minus areas (PDFMiner dist). */
-  private def getDist(o1: TextChunk, o2: TextChunk): Float = {
-    val x0 = math.min(o1.coordinates.x0, o2.coordinates.x0)
-    val y0 = math.min(o1.coordinates.y0, o2.coordinates.y0)
-    val x1 = math.max(o1.coordinates.x1, o2.coordinates.x1)
-    val y1 = math.max(o1.coordinates.y1, o2.coordinates.y1)
-    (x1 - x0) * (y1 - y0) -
-      widthC(o1.coordinates) * height(o1.coordinates) - widthC(o2.coordinates) * height(o2.coordinates)
-  }
-
-  /** pages_extractor.cc:97-111 */
-  private def isBetween(groups: ArrayBuffer[TextChunk], obj1: Int, obj2: Int): Boolean = {
-    val c1 = groups(obj1).coordinates
-    val c2 = groups(obj2).coordinates
-    val x0 = math.min(c1.x0, c2.x0)
-    val y0 = math.min(c1.y0, c2.y0)
-    val x1 = math.max(c1.x1, c2.x1)
-    val y1 = math.max(c1.y1, c2.y1)
-    var k = 0
-    while (k < groups.size) {
-      val obj = groups(k)
-      val c = obj.coordinates
-      if (c.x0 >= x0 && c.y0 >= y0 && c.x1 <= x1 && c.y1 <= y1 &&
-          !obj.isEmpty && !c.sameAs(c1) && !c.sameAs(c2)) return true
-      k += 1
-    }
-    false
-  }
-
   /** pages_extractor.cc:113-135 — merge o2 into o1 in reading order. */
   private def createGroup(groups: ArrayBuffer[TextChunk], obj1: Int, obj2: Int): Int = {
     def pos(o: TextChunk): Float =
@@ -310,67 +281,6 @@ object Layout {
     o1
   }
 
-  /** dist_t worklist as parallel primitive arrays (the reference's
-    * vector<dist_t> erase/push_back order semantics are preserved: removal
-    * compacts in order, new pairs append at the end). The (c, d) sort key
-    * is packed into ONE long — c in bit 32, the float's order-preserving
-    * bit image in the low 32 — so minIndex is a single long compare per
-    * element. getDist never produces -0.0 (a-a = +0.0 in IEEE), so the
-    * bit image ordering equals float ordering; ties keep first-index
-    * min_element semantics because equal (c, d) give equal keys. */
-  private final class DistList(capacity: Int) {
-    var key: Array[Long] = new Array[Long](capacity)
-    var o1: Array[Int] = new Array[Int](capacity)
-    var o2: Array[Int] = new Array[Int](capacity)
-    var size: Int = 0
-
-    @inline private def sortableBits(dv: Float): Long = {
-      val bits = java.lang.Float.floatToRawIntBits(dv)
-      (bits ^ (if (bits < 0) 0xFFFFFFFF else 0x80000000)).toLong & 0xFFFFFFFFL
-    }
-
-    def add(dv: Float, a: Int, b: Int): Unit = {
-      if (size == key.length) {
-        val n = key.length * 2
-        key = java.util.Arrays.copyOf(key, n)
-        o1 = java.util.Arrays.copyOf(o1, n)
-        o2 = java.util.Arrays.copyOf(o2, n)
-      }
-      key(size) = sortableBits(dv)
-      o1(size) = a
-      o2(size) = b
-      size += 1
-    }
-
-    def cIsZero(k: Int): Boolean = (key(k) >>> 32) == 0L
-    def deprioritize(k: Int): Unit = key(k) |= (1L << 32)
-
-    /** first index with minimal (c, d) — min_element semantics. */
-    def minIndex: Int = {
-      var m = 0
-      var k = 1
-      while (k < size) {
-        if (key(k) < key(m)) m = k
-        k += 1
-      }
-      m
-    }
-
-    /** drop every pair touching a or b, preserving order (remove_if). */
-    def removeTouching(a: Int, b: Int): Unit = {
-      var w = 0
-      var k = 0
-      while (k < size) {
-        if (!(o1(k) == a || o1(k) == b || o2(k) == a || o2(k) == b)) {
-          if (w != k) { key(w) = key(k); o1(w) = o1(k); o2(w) = o2(k) }
-          w += 1
-        }
-        k += 1
-      }
-      size = w
-    }
-  }
-
   /** pages_extractor.cc:402-412 */
   private def boxesAsIs(boxes: ArrayBuffer[TextChunk]): TextChunk = {
     val result = new TextChunk
@@ -384,18 +294,13 @@ object Layout {
     result
   }
 
-  // per-thread reused worklist: makePlane is called once per chunk group
-  // and allocated ~n² slots each time; the arrays persist per executor
-  // thread and only ever grow (makePlane is not reentrant)
-  private val tlDists = ThreadLocal.withInitial[DistList](() => new DistList(4096))
-
   /** Flat per-box mirror of (coords, area, isEmpty) for the O(n²) distance
-    * loops: getDist on TextChunk→Coords objects is two dependent pointer
-    * loads per operand per pair; on parallel primitive arrays it's
-    * sequential float loads, and the per-box area (invariant between
-    * merges) is computed once per box instead of once per pair. Values are
-    * bit-identical to the object path — same expressions over the same
-    * floats — merged groups are re-`load`ed after each createGroup. */
+    * and containment loops: on parallel primitive arrays they are
+    * sequential float loads instead of two dependent pointer loads per
+    * operand, and the per-box area (invariant between merges) is computed
+    * once per box instead of once per pair. Values are bit-identical to the
+    * boxes' own — same expressions over the same floats — and a merged
+    * group is re-`load`ed after each createGroup. */
   private final class BoxCache {
     var x0 = new Array[Float](512); var y0 = new Array[Float](512)
     var x1 = new Array[Float](512); var y1 = new Array[Float](512)
@@ -413,7 +318,8 @@ object Layout {
       area(i) = (c.x1 - c.x0) * (c.y1 - c.y0)
       dead(i) = b.isEmpty
     }
-    /** pages_extractor.cc:392-400 — union area minus areas, flat. */
+    /** pages_extractor.cc:392-400 — union area minus areas. Not symmetric
+      * in floating point: callers keep the reference's operand order. */
     def dist(i: Int, j: Int): Float = {
       val ux0 = math.min(x0(i), x0(j))
       val uy0 = math.min(y0(i), y0(j))
@@ -421,45 +327,180 @@ object Layout {
       val uy1 = math.max(y1(i), y1(j))
       (ux1 - ux0) * (uy1 - uy0) - area(i) - area(j)
     }
+    private def sameAs(k: Int, i: Int): Boolean =
+      x0(k) == x0(i) && y0(k) == y0(i) && x1(k) == x1(i) && y1(k) == y1(i)
+    /** pages_extractor.cc:97-111 — does a live box other than i and j (by
+      * coordinates) lie inside their union's bounding box? */
+    def isBetween(n: Int, i: Int, j: Int): Boolean = {
+      val ux0 = math.min(x0(i), x0(j))
+      val uy0 = math.min(y0(i), y0(j))
+      val ux1 = math.max(x1(i), x1(j))
+      val uy1 = math.max(y1(i), y1(j))
+      var k = 0
+      while (k < n) {
+        if (x0(k) >= ux0 && y0(k) >= uy0 && x1(k) <= ux1 && y1(k) <= uy1 &&
+            !dead(k) && !sameAs(k, i) && !sameAs(k, j)) return true
+        k += 1
+      }
+      false
+    }
   }
   private val tlBoxes = ThreadLocal.withInitial[BoxCache](() => new BoxCache)
 
-  /** pages_extractor.cc:414-452 — greedy agglomerative clustering, capped. */
+  /** The reference's dist_t worklist (pages_extractor.cc:414-452) without
+    * the list. The reference keeps a vector of pairs, takes min_element
+    * by (c, d), erases every pair touching a merged box (order-preserving
+    * remove_if) and appends the new group's pairs. So the vector is always
+    * in insertion order, and its pick is the minimal (c, d, insertion
+    * number) over the live pairs — a live pair being one whose boxes have
+    * not been merged since it was inserted, exactly one per live box pair.
+    *
+    * Here each live pair has one key in a symmetric n × n matrix: c in bit
+    * 52, the float d's order-preserving bit image in bits 20..51 (dist
+    * never produces -0.0, a-a = +0.0 in IEEE, so the image orders as the
+    * floats do), and the pair's insertion number in the low 20 bits (fewer
+    * than n² ≤ MAX_BOXES² < 2^20 pairs are ever inserted). Keys are unique,
+    * so the minimal key is the reference's pick. Each box caches its
+    * minimal key and partner; the global pick is an O(n) scan over them.
+    * Deprioritizing a pair rescans its two rows; a merge writes the group's
+    * row and rescans only the rows whose best partner was merged. */
+  private final class PairIndex {
+    private var key = new Array[Long](64 * 64)
+    private var bestKey = new Array[Long](64)
+    private var partner = new Array[Int](64)
+    /** born(i): insertion number of box i's first pair as a merged group,
+      * -1 while it is an original box. */
+    private var born = new Array[Int](64)
+    private var n = 0
+    private var seq = 0
+
+    private def pack(dv: Float): Long = {
+      val bits = java.lang.Float.floatToRawIntBits(dv)
+      val d = (bits ^ (if (bits < 0) 0xFFFFFFFF else 0x80000000)).toLong & 0xFFFFFFFFL
+      val k = (d << PairIndex.SeqBits) | seq
+      seq += 1
+      k
+    }
+
+    private def set(i: Int, j: Int, k: Long): Unit = { key(i * n + j) = k; key(j * n + i) = k }
+
+    private def rescan(bc: BoxCache, i: Int): Unit = {
+      var m = Long.MaxValue
+      var p = -1
+      val row = i * n
+      var j = 0
+      while (j < n) {
+        if (j != i && !bc.dead(j) && key(row + j) < m) { m = key(row + j); p = j }
+        j += 1
+      }
+      bestKey(i) = m
+      partner(i) = p
+    }
+
+    /** Every pair (i, j), i < j, inserted in row-major order. */
+    def init(bc: BoxCache, boxes: Int): Unit = {
+      n = boxes
+      seq = 0
+      if (n * n > key.length) key = new Array[Long](n * n)
+      if (n > partner.length) {
+        bestKey = new Array[Long](n); partner = new Array[Int](n); born = new Array[Int](n)
+      }
+      java.util.Arrays.fill(bestKey, 0, n, Long.MaxValue)
+      java.util.Arrays.fill(born, 0, n, -1)
+      var i = 0
+      while (i < n) {
+        var j = i + 1
+        while (j < n) {
+          val k = pack(bc.dist(i, j))
+          set(i, j, k)
+          if (k < bestKey(i)) { bestKey(i) = k; partner(i) = j }
+          if (k < bestKey(j)) { bestKey(j) = k; partner(j) = i }
+          j += 1
+        }
+        i += 1
+      }
+    }
+
+    /** best(i): the partner in box i's minimal live pair. */
+    def best(i: Int): Int = partner(i)
+
+    /** The live box whose minimal pair is the minimal live pair. */
+    def pick(bc: BoxCache): Int = {
+      var m = -1
+      var i = 0
+      while (i < n) {
+        if (!bc.dead(i) && (m < 0 || bestKey(i) < bestKey(m))) m = i
+        i += 1
+      }
+      m
+    }
+
+    def isDeprioritized(i: Int): Boolean = (bestKey(i) & PairIndex.Deprioritized) != 0
+
+    /** The pair's first box, as the reference's pair stores it: the lower
+      * index for an original pair, else the group whose merge inserted it
+      * (the later-born of the two: a pair dies when either box merges). */
+    def first(i: Int, j: Int): Int =
+      if (born(i) == born(j)) math.min(i, j) else if (born(i) > born(j)) i else j
+
+    /** Raise pair (i, j)'s c to 1; it was both rows' minimum. */
+    def deprioritize(bc: BoxCache, i: Int, j: Int): Unit = {
+      set(i, j, key(i * n + j) | PairIndex.Deprioritized)
+      rescan(bc, i)
+      rescan(bc, j)
+    }
+
+    /** `gone` was merged into `group` (already re-`load`ed, `gone` dead):
+      * insert (group, b) for every live b in index order. */
+    def merged(bc: BoxCache, group: Int, gone: Int): Unit = {
+      born(group) = seq
+      bestKey(group) = Long.MaxValue
+      var b = 0
+      while (b < n) {
+        if (b != group && !bc.dead(b)) {
+          val k = pack(bc.dist(group, b))
+          set(group, b, k)
+          if (k < bestKey(group)) { bestKey(group) = k; partner(group) = b }
+          if (partner(b) == group || partner(b) == gone) rescan(bc, b)
+          else if (k < bestKey(b)) { bestKey(b) = k; partner(b) = group }
+        }
+        b += 1
+      }
+    }
+  }
+  private object PairIndex {
+    final val SeqBits = 20
+    final val Deprioritized = 1L << (32 + SeqBits)
+  }
+  private val tlPairs = ThreadLocal.withInitial[PairIndex](() => new PairIndex)
+
+  /** pages_extractor.cc:414-452 — greedy agglomerative clustering, capped.
+    * Boxes arrive non-empty (makeTextBoxes clears empty ones), so every
+    * pair starts live. Per-thread reused state: makePlane is not
+    * reentrant. */
   private def makePlane(boxes: ArrayBuffer[TextChunk]): TextChunk = {
     if (boxes.isEmpty) return new TextChunk
     if (boxes.size > MAX_BOXES) return boxesAsIs(boxes)
     val n = boxes.size
     val bc = tlBoxes.get()
     bc.ensure(n)
-    val dists = tlDists.get()
-    dists.size = 0
     var i = 0
     while (i < n) { bc.load(i, boxes(i)); i += 1 }
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        dists.add(bc.dist(i, j), i, j)
-        j += 1
-      }
-      i += 1
-    }
-    while (dists.size > 0) {
-      val m = dists.minIndex
-      if (dists.cIsZero(m) && isBetween(boxes, dists.o1(m), dists.o2(m))) {
-        dists.deprioritize(m)
-      } else {
-        val d1 = dists.o1(m)
-        val d2 = dists.o2(m)
-        dists.removeTouching(d1, d2)
-        val group = createGroup(boxes, d1, d2)
+    val pairs = tlPairs.get()
+    pairs.init(bc, n)
+    var live = n
+    while (live > 1) {
+      val a = pairs.pick(bc)
+      val b = pairs.best(a)
+      if (!pairs.isDeprioritized(a) && bc.isBetween(n, a, b)) pairs.deprioritize(bc, a, b)
+      else {
+        val o1 = pairs.first(a, b)
+        val group = createGroup(boxes, o1, if (o1 == a) b else a)
+        val gone = if (group == a) b else a
         bc.load(group, boxes(group))
-        bc.dead(if (group == d1) d2 else d1) = true
-        var b = 0
-        while (b < n) {
-          if (b != group && !bc.dead(b)) dists.add(bc.dist(group, b), group, b)
-          b += 1
-        }
+        bc.dead(gone) = true
+        pairs.merged(bc, group, gone)
+        live -= 1
       }
     }
     val rem = boxes.find(g => !g.isEmpty)

@@ -151,6 +151,69 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     assert(s.read.parquet(s"$out/metrics").head().getAs[Long]("media_total") == 1L)
   }
 
+  test("lineage and metrics contract: pinned schemas, metrics = column sums of lineage") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.types._
+    val built = Corpus.build(nDocs = 16, heavyEvery = 4)
+    val out = tmpDir()
+    val committed = ExtractJob.run(s.createDataset(built.docs).toDF(), s.createDataset(built.media).toDF(), out, runId = "c1")
+    assert(committed.schema == s.read.parquet(s"$out/spans_out/run=c1").schema)
+    def fields(f: (String, DataType)*) = StructType(f.map { case (n, t) => StructField(n, t, nullable = true) })
+    val lineage = s.read.parquet(s"$out/lineage/run=c1")
+    val metrics = s.read.parquet(s"$out/metrics/run=c1")
+    assert(lineage.schema == fields("partition_id" -> IntegerType, "media_in" -> LongType,
+      "media_ok" -> LongType, "media_failed" -> LongType, "bytes_in" -> LongType, "wall_ms" -> LongType,
+      "run_id" -> StringType, "input_snapshot" -> StringType))
+    assert(metrics.schema == fields("media_total" -> LongType, "media_ok" -> LongType,
+      "bytes_total" -> LongType, "run_id" -> StringType))
+    val lin = lineage.collect()
+    assert(lin.nonEmpty && lin.forall(r => r.getAs[String]("run_id") == "c1" && r.getAs[String]("input_snapshot") == out))
+    assert(lin.map(_.getAs[Long]("media_in")).sum == built.media.size)
+    val m = metrics.collect()
+    assert(m.length == 1)
+    assert(m(0).getAs[Long]("media_total") == lin.map(_.getAs[Long]("media_in")).sum)
+    assert(m(0).getAs[Long]("media_ok") == lin.map(_.getAs[Long]("media_ok")).sum)
+    assert(m(0).getAs[Long]("bytes_total") == lin.map(_.getAs[Long]("bytes_in")).sum)
+    assert(m(0).getAs[String]("run_id") == "c1")
+
+    // a run with only text spans extracts nothing: no lineage rows, and one
+    // metrics row with media_total = 0 and NULL sums
+    val textOnly = s.createDataset(Seq(Model.DocRow("t", Seq(Model.InSpan("text", "only", "", 0))))).toDF()
+    ExtractJob.run(textOnly, s.createDataset(built.media).toDF(), out, runId = "c2")
+    assert(s.read.parquet(s"$out/lineage/run=c2").count() == 0)
+    val empty = s.read.parquet(s"$out/metrics/run=c2").collect()
+    assert(empty.length == 1)
+    assert(empty(0).getAs[Long]("media_total") == 0L)
+    assert(empty(0).isNullAt(empty(0).fieldIndex("media_ok")))
+    assert(empty(0).isNullAt(empty(0).fieldIndex("bytes_total")))
+    assert(empty(0).getAs[String]("run_id") == "c2")
+  }
+
+  test("a failed write leaves the manifest unchanged and no cached extraction behind") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val built = Corpus.build(nDocs = 8, heavyEvery = 1000)
+    val media = s.createDataset(built.media).toDF()
+    val out = tmpDir()
+    ExtractJob.run(s.createDataset(built.docs.take(4)).toDF(), media, out, runId = "ok")
+    val manifest = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$out/_committed"))
+    assert(s.sparkContext.getPersistentRDDs.isEmpty)
+    // a regular file where the lineage directory belongs: the lineage write fails
+    def deleteTree(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+      f.delete()
+    }
+    deleteTree(new java.io.File(s"$out/lineage"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$out/lineage"), "not a directory")
+    intercept[Exception] {
+      ExtractJob.run(s.createDataset(built.docs).toDF(), media, out, runId = "broken")
+    }
+    assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$out/_committed")).toSeq == manifest.toSeq)
+    assert(ExtractJob.committedSnapshots(out) == Seq("ok"))
+    assert(s.sparkContext.getPersistentRDDs.isEmpty, "the failed run's cached extraction leaked")
+  }
+
   test("poison documents become error spans, job survives") {
     implicit val s: SparkSession = spark
     import s.implicits._
